@@ -17,7 +17,7 @@ import graft.ops.Transforms
  *     independent queries started from the same lineage
  *     (`Real_Time_Data.py:139-160` re-reads Kafka 3× and checkpoints only
  *     one of the sinks). Here the micro-batch is persisted once, written to
- *     every sink, and the single checkpoint covers all of them.
+ *     every sink concurrently, and the single checkpoint covers all of them.
  *  2. Every sink write is keyed and replay-idempotent: `dropDuplicates` on
  *     the key within the batch, and (for the parquet sink) batchId-derived
  *     dynamic partition overwrite, so a replayed batch rewrites its own
@@ -80,7 +80,9 @@ object StreamingEtl {
       max("age").as("max_age"))
   }
 
-  /** A named sink taking one deduplicated micro-batch. */
+  /** A named sink taking one micro-batch as the stream produced it, with
+   * its batch id. The batch is not deduplicated: a keyed sink dedups on its
+   * own key (see `parquetKeyedSink`). */
   final case class BatchSink(name: String, write: (DataFrame, Long) => Unit)
 
   /** Parquet keyed sink: in-batch key dedup + batch-deterministic placement.
@@ -91,13 +93,18 @@ object StreamingEtl {
    * batch's partition instead of appending a second copy — a plain
    * `mode("append")` here would only be at-least-once, since foreachBatch
    * has no sink-side commit protocol of its own. Idempotent replay +
-   * checkpointed offsets = exactly-once file contents. */
+   * checkpointed offsets = exactly-once file contents.
+   *
+   * Files are zstd-compressed, as in `WriteLayout`: one small file per
+   * micro-batch carries a fixed footer and page overhead, and zstd stores
+   * the profile columns in fewer bytes than snappy. */
   def parquetKeyedSink(path: String, key: String = "id"): BatchSink =
     BatchSink(s"parquet:$path", (batch, batchId) =>
       batch.dropDuplicates(key)
         .withColumn("__batch_id", org.apache.spark.sql.functions.lit(batchId))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
+        .option("compression", "zstd")
         .partitionBy("__batch_id")
         .parquet(path))
 
@@ -117,7 +124,14 @@ object StreamingEtl {
         .save())
 
   /** Single-query multi-sink fan-out: persist each micro-batch once, write
-   * to every sink, one checkpoint for all. */
+   * it to every sink, one checkpoint for all.
+   *
+   * The sinks of a batch run concurrently: the first on the stream thread,
+   * each further one on a thread of its own (see `writeAll`). A sink must
+   * therefore not depend on another sink's output for the same batch. The
+   * offset commit follows all sinks: a batch any sink failed is not
+   * committed, and a restart replays it whole to every sink, so each sink
+   * must be replay-idempotent (as `parquetKeyedSink` is). */
   def start(
       profiles: DataFrame,
       checkpointDir: String,
@@ -129,9 +143,51 @@ object StreamingEtl {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.persist()
-        try sinks.foreach(_.write(batch, batchId))
+        try writeAll(sinks, batch, batchId)
         finally batch.unpersist()
         ()
       }
       .start()
+
+  /** Name prefix of the threads that write a batch to its second and later
+   * sinks. */
+  private[graft] val FanOutThread = "sink-fan-out"
+
+  /** Writes `batch` to every sink at once and returns when all have
+   * finished. The first sink runs on the calling thread and each further
+   * sink on a new thread, which inherits Spark's local properties: the
+   * query's job group, so stopping the query cancels its jobs too, and the
+   * batch id. Every thread is joined, even when the caller is interrupted
+   * (the interrupt is passed on to the sink threads and restored after).
+   * The first failure in sink order is rethrown with the others suppressed. */
+  private def writeAll(sinks: Seq[BatchSink], batch: DataFrame, batchId: Long): Unit = {
+    val failures = new Array[Throwable](sinks.size)
+    def run(i: Int): Unit =
+      try sinks(i).write(batch, batchId)
+      catch { case t: Throwable => failures(i) = t }
+    val threads = sinks.indices.drop(1).map { i =>
+      val t = new Thread(() => run(i), s"$FanOutThread[${sinks(i).name}] batch $batchId")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    if (sinks.nonEmpty) run(0)
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join()
+        catch {
+          case _: InterruptedException =>
+            interrupted = true
+            threads.foreach(_.interrupt())
+        }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    failures.filter(_ != null).toList match {
+      case first :: rest =>
+        rest.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+      case Nil => ()
+    }
+  }
 }

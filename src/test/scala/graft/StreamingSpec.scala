@@ -1,10 +1,19 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 import java.sql.{Date, Timestamp}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, CyclicBarrier, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.streaming.{StreamingAnalytics, StreamingEtl}
 
@@ -22,6 +31,18 @@ class StreamingSpec extends SparkTestBase {
        |"location":{"street":{"number":1,"name":"s"},"city":"c","state":"st","country":"co","postcode":9},
        |"email":"a@b.com","login":{"uuid":"$uuid","username":"u"},
        |"registered":{"date":"2015-07-02T11:22:33.444Z"}}]}""".stripMargin.replaceAll("\n", "")
+
+  private def parquetFiles(dir: String): Seq[Path] = {
+    val s = Files.walk(Paths.get(dir))
+    try s.iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    finally s.close()
+  }
+
+  /** Live threads writing to any of `sinks` off the stream thread. */
+  private def fanOutThreads(sinks: StreamingEtl.BatchSink*): Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.filter(t =>
+      t.getName.startsWith(StreamingEtl.FanOutThread) &&
+        sinks.exists(s => t.getName.contains(s.name))).toSet
 
   test("spine streams end-to-end through single-query fan-out to two sinks") {
     implicit val sqlCtx = spark.sqlContext
@@ -45,6 +66,121 @@ class StreamingSpec extends SparkTestBase {
     assert(rows.count() == 2)  // u-1 deduped in-batch, kid filtered by age
     assert(rows.select("id").as[String].collect().toSet == Set("u-1", "u-2"))
     assert(consoleBatches == 3)  // second sink saw the (pre-dedup) batch
+
+    // every file the keyed sink wrote is zstd-compressed, per its footer
+    val conf = spark.sessionState.newHadoopConf()
+    val files = parquetFiles(out1)
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HadoopPath(f.toUri), conf))
+      val codecs =
+        try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+        finally r.close()
+      assert(codecs == Set(CompressionCodecName.ZSTD), s"$f: $codecs")
+    }
+  }
+
+  test("fan-out writes a batch to its sinks concurrently, each under the " +
+    "query's job group and the batch's id") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[String]
+    val cp = Files.createTempDirectory("fan_cp").toString
+    // each sink waits for the other: only sinks that run at once get past it
+    val barrier = new CyclicBarrier(2)
+    val seen = new ConcurrentHashMap[(String, Long), (String, String)]()
+    def sink(name: String) = StreamingEtl.BatchSink(name, (_, batchId) => {
+      val sc = spark.sparkContext
+      seen.put((name, batchId),
+        (sc.getLocalProperty("streaming.sql.batchId"), sc.getLocalProperty("spark.jobGroup.id")))
+      barrier.await(30, TimeUnit.SECONDS)
+      ()
+    })
+
+    val profiles = StreamingEtl.profileStream(input.toDF().select($"value"), asOf)
+    val q = StreamingEtl.start(profiles, cp, Seq(sink("first"), sink("second")))
+    input.addData(envelope("u-1"))
+    q.processAllAvailable()
+    input.addData(envelope("u-2"))
+    q.processAllAvailable()
+    q.stop()
+
+    assert(q.exception.isEmpty)
+    assert(seen.keySet.asScala.map(_._2) == Set(0L, 1L))
+    for (b <- Seq(0L, 1L); name <- Seq("first", "second"))
+      assert(seen.get((name, b)) == ((b.toString, q.runId.toString)), s"$name, batch $b")
+  }
+
+  test("a crash between sinks fails the batch; the restart replays it whole " +
+    "and each sink holds every id once") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[String]
+    val outA = Files.createTempDirectory("crash_a").toString
+    val outB = Files.createTempDirectory("crash_b").toString
+    val cp = Files.createTempDirectory("crash_cp").toString
+    val a = StreamingEtl.parquetKeyedSink(outA)
+    val b = StreamingEtl.parquetKeyedSink(outB)
+    val aWrote = new CountDownLatch(1)
+    val crashed = new AtomicBoolean(false)
+    val bCalls = new AtomicInteger(0)
+    val sinks = Seq(
+      StreamingEtl.BatchSink(a.name, (df, id) => { a.write(df, id); aWrote.countDown() }),
+      // b fails its first call for batch 0, once a has written that batch
+      StreamingEtl.BatchSink(b.name, (df, id) => {
+        bCalls.incrementAndGet()
+        if (id == 0 && crashed.compareAndSet(false, true)) {
+          aWrote.await(30, TimeUnit.SECONDS)
+          throw new IllegalStateException("crash between sinks")
+        }
+        b.write(df, id)
+      }))
+    val profiles = StreamingEtl.profileStream(input.toDF().select($"value"), asOf)
+
+    val q1 = StreamingEtl.start(profiles, cp, sinks)
+    input.addData(envelope("u-1"), envelope("u-2"))
+    val e = intercept[StreamingQueryException](q1.processAllAvailable())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "crash between sinks"), e)
+    assert(fanOutThreads(sinks: _*).isEmpty)
+    assert(parquetFiles(outA).nonEmpty && parquetFiles(outB).isEmpty)
+
+    val q2 = StreamingEtl.start(profiles, cp, sinks)
+    input.addData(envelope("u-3"))
+    q2.processAllAvailable()
+    q2.stop()
+    assert(fanOutThreads(sinks: _*).isEmpty)
+
+    def rows(out: String) = spark.read.parquet(out).select($"id", $"__batch_id".cast("long"))
+      .as[(String, Long)].collect().toSeq.sorted
+    val inA = rows(outA)
+    assert(inA == Seq(("u-1", 0L), ("u-2", 0L), ("u-3", 1L)))  // batch 0 replayed, once
+    assert(rows(outB) == inA)
+    assert(bCalls.get == 3)  // batch 0 failed, batch 0 replayed, batch 1
+  }
+
+  test("stop() during a fan-out interrupts the sink still writing and joins " +
+    "its thread") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[String]
+    val cp = Files.createTempDirectory("stop_cp").toString
+    val firstDone = new CountDownLatch(1)
+    val secondStarted = new CountDownLatch(1)
+    val secondInterrupted = new AtomicBoolean(false)
+    val first = StreamingEtl.BatchSink("first", (_, _) => firstDone.countDown())
+    val second = StreamingEtl.BatchSink(s"blocking:$cp", (_, _) => {
+      secondStarted.countDown()
+      try { new CountDownLatch(1).await(60, TimeUnit.SECONDS); () }
+      catch { case ie: InterruptedException => secondInterrupted.set(true); throw ie }
+    })
+    val profiles = StreamingEtl.profileStream(input.toDF().select($"value"), asOf)
+
+    val q = StreamingEtl.start(profiles, cp, Seq(first, second))
+    input.addData(envelope("u-1"))
+    assert(firstDone.await(30, TimeUnit.SECONDS) && secondStarted.await(30, TimeUnit.SECONDS))
+    q.stop()
+
+    assert(secondInterrupted.get)
+    assert(fanOutThreads(second).isEmpty)
+    assert(q.exception.isEmpty)  // an interrupt by stop() is a clean stop
   }
 
   test("restart from checkpoint does not duplicate committed batches") {
