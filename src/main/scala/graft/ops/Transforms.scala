@@ -95,7 +95,7 @@ object Transforms {
    * List's high-traffic ccTLD second-level families. A registrable domain
    * sits one label LEFT of its public suffix, so `a@b.co.uk` → `b`, not
    * `co`. */
-  private val PublicSuffix2: Seq[String] = Seq(
+  private val PublicSuffix2: Set[String] = Set(
     "co.uk", "org.uk", "ac.uk", "gov.uk", "me.uk", "net.uk", "ltd.uk",
     "plc.uk", "nhs.uk", "police.uk",
     "co.jp", "ne.jp", "or.jp", "ac.jp", "go.jp", "ad.jp", "ed.jp", "gr.jp",
@@ -191,7 +191,7 @@ object Transforms {
    * blocks (`pref.hokkaido.jp`-class), and the Australian state
    * education/government registries. Generated, not hand-typed, so each
    * family is complete. */
-  private val PublicSuffix3: Seq[String] = {
+  private val PublicSuffix3: Set[String] = {
     val usStates = Seq(
       "ak", "al", "ar", "as", "az", "ca", "co", "ct", "dc", "de", "fl",
       "ga", "gu", "hi", "ia", "id", "il", "in", "ks", "ky", "la", "ma",
@@ -221,7 +221,7 @@ object Transforms {
       jpDesignatedCities.map(c => s"city.$c.jp") ++ Seq("metro.tokyo.jp")
     val auStates = Seq("act", "nsw", "nt", "qld", "sa", "tas", "vic", "wa")
     val auFamilies = auStates.flatMap(s => Seq(s"$s.edu.au", s"$s.gov.au"))
-    usFamilies ++ jpFamilies ++ auFamilies
+    (usFamilies ++ jpFamilies ++ auFamilies).toSet
   }
 
   /** PSL wildcard cities: the seven Japanese designated cities the PSL
@@ -235,8 +235,8 @@ object Transforms {
   /** Wildcard-parent suffixes (`*.sch.uk` / `*.kobe.jp`-class PSL rules):
    * EVERY third label under these forms a public suffix, so the
    * registrable domain sits one further label left. */
-  private val WildcardParent2: Seq[String] =
-    "sch.uk" +: JpWildcardCities.map(c => s"$c.jp")
+  private val WildcardParent2: Set[String] =
+    ("sch.uk" +: JpWildcardCities.map(c => s"$c.jp")).toSet
 
   /** PSL `!`-EXCEPTION rules: hosts matching a wildcard whose 3-label tail
    * is listed here are REGISTRABLE after all — the exception cancels the
@@ -244,8 +244,8 @@ object Transforms {
    * and that leftmost label is the domain (`a@www.city.kobe.jp` → `city`,
    * the registered domain being `city.kobe.jp`). This is the PSL
    * algorithm's "exception rules win over all other matching rules". */
-  private val ExceptionSuffix3: Seq[String] =
-    JpWildcardCities.map(c => s"city.$c.jp")
+  private val ExceptionSuffix3: Set[String] =
+    JpWildcardCities.map(c => s"city.$c.jp").toSet
 
   /** A3 helper: registered-domain extraction from an email address
    * (`user@mail.example.com` → `example`). Matches
@@ -259,15 +259,34 @@ object Transforms {
    * first, per the PSL algorithm. */
   def emailDomain(email: Column): Column = {
     val host = substring_index(email, "@", -1)
-    val last2 = lower(substring_index(host, ".", -2))
-    val last3 = lower(substring_index(host, ".", -3))
-    when(last3.isin(ExceptionSuffix3: _*),
-        substring_index(substring_index(host, ".", -3), ".", 1))
-      .when(last3.isin(PublicSuffix3: _*) || last2.isin(WildcardParent2: _*),
-        substring_index(substring_index(host, ".", -4), ".", 1))
-      .when(last2.isin(PublicSuffix2: _*),
-        substring_index(substring_index(host, ".", -3), ".", 1))
-      .otherwise(substring_index(substring_index(host, ".", -2), ".", 1))
+    RegisteredDomain(host, lower(host))
+  }
+
+  /** [[emailDomain]]'s suffix match on a host, given also in lower case.
+   * One expression node whose suffix sets stay JVM `Set`s, so that no plan
+   * using it carries the hundreds of suffixes as literals for the analyzer
+   * and optimizer to walk. Lower-casing neither adds nor removes a `.`, so
+   * the tails of `lowerHost` are the lower-cased tails of `host`. */
+  private val RegisteredDomain = udf { (host: String, lowerHost: String) =>
+    if (host == null) null
+    else {
+      val last2 = lastLabels(lowerHost, 2)
+      val last3 = lastLabels(lowerHost, 3)
+      val labels =
+        if (ExceptionSuffix3(last3)) 3
+        else if (PublicSuffix3(last3) || WildcardParent2(last2)) 4
+        else if (PublicSuffix2(last2)) 3
+        else 2
+      lastLabels(host, labels).takeWhile(_ != '.')
+    }
+  }
+
+  /** `substring_index(s, ".", -n)`: the last `n` labels of `s`, or all of
+   * `s` when it has fewer. */
+  private def lastLabels(s: String, n: Int): String = {
+    var i = s.length
+    for (_ <- 1 to n) i = s.lastIndexOf('.', i - 1)
+    s.substring(i + 1)
   }
 
   /** The full E1 chain: raw Kafka-shaped rows → filtered 9-column profiles. */

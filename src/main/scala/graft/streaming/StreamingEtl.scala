@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Date
 
+import org.apache.parquet.hadoop.ParquetOutputFormat
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -19,10 +20,10 @@ import graft.ops.Transforms
  *     one of the sinks). Here the micro-batch is persisted once, written to
  *     every sink concurrently, and the single checkpoint covers all of them.
  *  2. Every sink write is keyed and replay-idempotent: `dropDuplicates` on
- *     the key within the batch, and (for the parquet sink) batchId-derived
- *     dynamic partition overwrite, so a replayed batch rewrites its own
- *     partition instead of appending a duplicate — exactly-once file
- *     contents rather than the reference's at-least-once.
+ *     the key within the batch, and (for the parquet sink) an overwrite of
+ *     the batch's own `__batch_id=<n>` directory, so a replayed batch
+ *     rewrites that directory instead of appending a duplicate — exactly-once
+ *     file contents rather than the reference's at-least-once.
  *
  * Sources are abstracted so the same plan runs from Kafka in production and
  * from MemoryStream/file sources in tests (no network in CI).
@@ -87,26 +88,34 @@ object StreamingEtl {
 
   /** Parquet keyed sink: in-batch key dedup + batch-deterministic placement.
    *
-   * Each micro-batch lands in its own `__batch_id=<n>` partition via dynamic
-   * partition overwrite, so replaying a batch (crash after a partial OR
-   * complete write, before the checkpoint commit) overwrites exactly that
-   * batch's partition instead of appending a second copy — a plain
-   * `mode("append")` here would only be at-least-once, since foreachBatch
-   * has no sink-side commit protocol of its own. Idempotent replay +
-   * checkpointed offsets = exactly-once file contents.
+   * Each micro-batch is written as one task: the batch is coalesced to a
+   * single partition before the key dedup, which that partitioning already
+   * satisfies, so the dedup plans no shuffle and the task writes one file.
+   * That holds for a batch of any size: a large backlog batch is also one
+   * task and one file per sink.
    *
-   * Files are zstd-compressed, as in `WriteLayout`: one small file per
-   * micro-batch carries a fixed footer and page overhead, and zstd stores
-   * the profile columns in fewer bytes than snappy. */
+   * The file goes straight to the batch's own `__batch_id=<n>` directory in
+   * overwrite mode, so replaying a batch (crash after a partial OR complete
+   * write, before the checkpoint commit) deletes that directory and rewrites
+   * it instead of appending a second copy — a plain `mode("append")` here
+   * would only be at-least-once, since foreachBatch has no sink-side commit
+   * protocol of its own. Idempotent replay + checkpointed offsets =
+   * exactly-once file contents. Readers of `path` discover `__batch_id` as
+   * a partition column. A reader listing `path` while a replay runs can miss
+   * that batch until the replay commits.
+   *
+   * Files are zstd-compressed, as in `WriteLayout`, and carry no column
+   * statistics: one small file per micro-batch carries a fixed footer and
+   * page overhead, zstd stores the profile columns in fewer bytes than
+   * snappy, and min/max over one batch of random profiles spans the whole
+   * id, age and email ranges, so it would prune no file. */
   def parquetKeyedSink(path: String, key: String = "id"): BatchSink =
     BatchSink(s"parquet:$path", (batch, batchId) =>
-      batch.dropDuplicates(key)
-        .withColumn("__batch_id", org.apache.spark.sql.functions.lit(batchId))
+      batch.coalesce(1).dropDuplicates(key)
         .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
         .option("compression", "zstd")
-        .partitionBy("__batch_id")
-        .parquet(path))
+        .option(ParquetOutputFormat.STATISTICS_ENABLED, "false")
+        .parquet(s"$path/__batch_id=$batchId"))
 
   /** Console sink (reference K4). */
   def consoleSink(rows: Int = 20): BatchSink =

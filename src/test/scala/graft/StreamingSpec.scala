@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.sql.{Date, Timestamp}
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, CyclicBarrier, TimeUnit}
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
@@ -11,6 +11,7 @@ import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
@@ -67,17 +68,88 @@ class StreamingSpec extends SparkTestBase {
     assert(rows.select("id").as[String].collect().toSet == Set("u-1", "u-2"))
     assert(consoleBatches == 3)  // second sink saw the (pre-dedup) batch
 
-    // every file the keyed sink wrote is zstd-compressed, per its footer
+    // every column chunk the keyed sink wrote is zstd-compressed and carries
+    // no min/max statistics, per its footer
     val conf = spark.sessionState.newHadoopConf()
     val files = parquetFiles(out1)
     assert(files.nonEmpty)
     files.foreach { f =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HadoopPath(f.toUri), conf))
-      val codecs =
-        try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+      val chunks =
+        try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq
         finally r.close()
-      assert(codecs == Set(CompressionCodecName.ZSTD), s"$f: $codecs")
+      assert(chunks.nonEmpty, f)
+      assert(chunks.map(_.getCodec).toSet == Set(CompressionCodecName.ZSTD), f)
+      chunks.foreach(c => assert(!c.getStatistics.hasNonNullValue, s"$f: ${c.getPath} ${c.getStatistics}"))
     }
+  }
+
+  test("a keyed sink dedups its key across the partitions of one batch") {
+    // two files in one batch are two partitions; both carry u-1
+    val in = Files.createTempDirectory("xpart_in")
+    Files.write(in.resolve("a.json"), Seq(envelope("u-1"), envelope("u-2")).asJava)
+    Files.write(in.resolve("b.json"), Seq(envelope("u-1"), envelope("u-3")).asJava)
+    val outA = Files.createTempDirectory("xpart_a").toString
+    val outB = Files.createTempDirectory("xpart_b").toString
+    val cp = Files.createTempDirectory("xpart_cp").toString
+    val partitions = new ConcurrentHashMap[Long, Int]()
+    val profiles = StreamingEtl.profileStream(
+      StreamingEtl.FileLinesSource(in.toString).load(spark), asOf)
+
+    val q = StreamingEtl.start(profiles, cp, Seq(
+      StreamingEtl.parquetKeyedSink(outA),
+      StreamingEtl.parquetKeyedSink(outB),
+      StreamingEtl.BatchSink("partitions", (b, id) => { partitions.put(id, b.rdd.getNumPartitions); () })),
+      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    assert(q.awaitTermination(60000), "AvailableNow query did not self-stop")
+
+    assert(partitions.asScala == Map(0L -> 2))
+    for (out <- Seq(outA, outB))
+      assert(spark.read.parquet(out).select("id").as[String].collect().toSeq.sorted ==
+        Seq("u-1", "u-2", "u-3"), out)
+  }
+
+  test("a keyed sink writes a batch without a shuffle") {
+    val batch = Seq("u-1", "u-2", "u-1", "u-3").toDF("id")
+      .withColumn("age", lit(30)).repartition(3).persist()
+    batch.count()
+    val out = Files.createTempDirectory("noshuffle").toString
+    val group = s"keyed-sink-shuffle-$out"
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val ended = ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new AtomicLong(0)
+    val completed = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(stages.add)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId)) {
+          completed.incrementAndGet()
+          shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.add(e.jobId); () }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "keyed sink write")
+      try StreamingEtl.parquetKeyedSink(out).write(batch, 7L)
+      finally sc.clearJobGroup()
+      val jobs = sc.statusTracker.getJobIdsForGroup(group).toSeq
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      while (!jobs.forall(ended.contains) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.nonEmpty && jobs.forall(ended.contains), s"jobs $jobs, ended $ended")
+    } finally {
+      sc.removeSparkListener(listener)
+      batch.unpersist()
+    }
+
+    assert(completed.get > 0)
+    assert(shuffleBytes.get == 0, s"${shuffleBytes.get} shuffle bytes written")
+    assert(parquetFiles(out).size == 1)
+    assert(spark.read.parquet(out).select($"id", $"__batch_id".cast("long"))
+      .as[(String, Long)].collect().toSeq.sorted == Seq(("u-1", 7L), ("u-2", 7L), ("u-3", 7L)))
   }
 
   test("fan-out writes a batch to its sinks concurrently, each under the " +
